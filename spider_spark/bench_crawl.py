@@ -125,8 +125,6 @@ def run_crawl_bench(level: int | str, world_dir: str, work_dir: str) -> dict:
             checkpoint_dir=ckpt,
             policy=BENCH_POLICY,
             n_partitions=4 * cores,
-            use_bloom=False,  # exact anti-join path; bloom is a pre-screen
-            bench_mode=True,
         )
         seeds = spark.read.parquet(os.path.join(world_dir, "seeds.parquet"))
         # steady-state warmup (same treatment as the headline suite): run a
@@ -154,8 +152,6 @@ def run_crawl_bench(level: int | str, world_dir: str, work_dir: str) -> dict:
             checkpoint_dir=warm_ckpt,
             policy=BENCH_POLICY,
             n_partitions=4 * cores,
-            use_bloom=False,
-            bench_mode=True,
         )
         warm_eng.warm_page_store()
         warm_eng.run(

@@ -29,10 +29,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--max-retries", type=int, default=2)
     p.add_argument("--max-rounds-total", type=int, default=1000)
     p.add_argument("--partitions", type=int, default=32)
-    p.add_argument("--no-bloom", action="store_true")
-    p.add_argument(
-        "--fetch-mode", choices=["join", "probe", "mapinpandas"], default="join"
-    )
     p.add_argument("--master", default=None, help="override spark master")
     return p
 
@@ -61,8 +57,6 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
             checkpoint_dir=args.checkpoint,
             policy=policy,
             n_partitions=args.partitions,
-            use_bloom=not args.no_bloom,
-            fetch_mode=args.fetch_mode,
         )
         seeds = spark.read.parquet(args.seeds) if args.seeds else None
         meta = eng.run(seeds=seeds, max_rounds=args.rounds)

@@ -3,7 +3,7 @@
 One round = one Spark job DAG (SURVEY.md §3.1 engine equivalent):
 
     pending frontier ──salted top-K per host (politeness budget)──►
-    fetch (co-partitioned page-store join | broadcast probe | mapInPandas) ──►
+    fetch (co-partitioned page-store join) ──►
     extract_text / extract_links (Arrow UDFs) ──►
     link dedup vs seen (partition-wise bloom pre-screen + exact left_anti) ──►
     atomic commit: results Δ + seen Δ + dead Δ + metrics Δ + frontier snapshot
@@ -22,8 +22,9 @@ Scale notes (designed for 10^10-URL frontier / 1000 executors):
   construction.
 - Global crawl-order seq is NOT materialized per round. It is a pure
   function of the stored data — rank over (round, priority,
-  discovery_time, url) — assigned lazily by ``results()`` with a
-  range-partitioned two-phase rank (no single-partition window). This
+  discovery_time, url) — assigned lazily by ``results()`` with the
+  range-partitioned two-phase order index of ``operators/scalewin.py``
+  (no single-partition window). This
   removes three per-round serial costs a 1000-executor round would also
   pay on the driver: the range-partitioner sampling pass, the per-round
   count collect, and a broadcast of the round's full URL set.
@@ -51,7 +52,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from spider_spark.engine import seen as seen_mod
 from spider_spark.engine.politeness import with_robots
@@ -81,48 +81,6 @@ def parquet_rowcount(path: str) -> int:
     return total
 
 
-def assign_global_seq(df: DataFrame, sort_cols: list[str], start: int, n_parts: int):
-    """Dense global sequence over total order of ``sort_cols`` without a
-    single-partition window: range-partition on the key, prefix-sum the
-    per-partition counts on the driver, add offsets per partition.
-    Returns (df_with_seq, persisted_handle, end) — caller unpersists the
-    handle after consuming the output.
-    """
-    import pandas as pd
-
-    d = (
-        df.repartitionByRange(n_parts, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = {
-        r["_pid"]: r["c"]
-        for r in d.groupBy("_pid").agg(F.count("*").alias("c")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    out_schema = T.StructType(d.schema.fields + [T.StructField("seq", T.LongType())])
-
-    def _gen(batches):
-        nxt = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if nxt is None:
-                nxt = offsets[int(pdf["_pid"].iloc[0])]
-            pdf = pdf.copy()
-            pdf["seq"] = pd.array(range(nxt, nxt + len(pdf)), dtype="int64")
-            nxt += len(pdf)
-            yield pdf
-
-    return d.mapInPandas(_gen, schema=out_schema).drop("_pid"), d, acc
-
-
 class CrawlEngine:
     def __init__(
         self,
@@ -133,26 +91,13 @@ class CrawlEngine:
         policy: CrawlPolicy = CrawlPolicy(),
         n_partitions: int = 8,
         bloom_partitions: int = 64,
-        use_bloom: bool = True,
-        fetch_mode: str = "join",  # "join" | "probe" | "mapinpandas"
-        bench_mode: bool = False,
     ):
-        """``bench_mode`` drops per-round observability writes (metrics,
-        dead table, disposition counts) to measure steady-state crawl
-        throughput; correctness-relevant state (results/seen/frontier) is
-        untouched.
-
-        ``fetch_mode``:
-        - "join" (default): dequeued LEFT JOIN the page store cached
-          hash-partitioned+sorted on url — only the small dequeued side
-          shuffles per round (co-located-join scale pattern).
-        - "probe": broadcast the dequeued URL set into the page-store scan
-          (inner hits + anti-join misses) — for stores too large to keep
-          partitioned-cached but cheap to re-scan with pushdown.
-        - "mapinpandas": per-batch transport UDF (the real-HTTP slot).
-        """
-        assert fetch_mode in ("join", "probe", "mapinpandas")
-        self.bench_mode = bench_mode
+        """Every round fetches by a LEFT JOIN of the dequeued URLs against
+        the page store cached hash-partitioned+sorted on url (only the small
+        dequeued side shuffles), dedups links with the bloom pre-screen plus
+        the exact anti-join, and commits results, seen, bloom blobs, dead,
+        metrics and lineage. ``n_partitions`` sizes the frontier and page
+        store; ``bloom_partitions`` keys the seen-set blobs."""
         self.spark = spark
         self.pages_path = pages_path
         self.robots_path = robots_path
@@ -166,8 +111,6 @@ class CrawlEngine:
         # exact confirm. The round-0 commit records the value; resume
         # overrides the constructor arg with the recorded one.
         self.bloom_partitions = bloom_partitions
-        self.use_bloom = use_bloom
-        self.fetch_mode = fetch_mode
         os.makedirs(os.path.join(self.ckpt, "commits"), exist_ok=True)
         self._recover_compaction()
         # adopt the blob keying recorded at round 0 (here, not in run(), so
@@ -191,8 +134,6 @@ class CrawlEngine:
         # Iceberg page store bucketed+sorted by url — real clusters don't
         # re-shuffle cold storage per round either)
         self._pages_cache: DataFrame | None = None
-        self._round_handles: list[DataFrame] = []
-        self._reader_handle: DataFrame | None = None
 
     # ---------- commit protocol ----------
     def _marker(self, r: int) -> str:
@@ -271,13 +212,10 @@ class CrawlEngine:
             lambda: seen_delta.write.mode("overwrite").parquet(
                 self._path("seen_delta", 0)
             ),
+            lambda: seen_mod.build_blobs(
+                seen_delta.select("url"), self.bloom_partitions
+            ).write.mode("overwrite").parquet(self._path("seen_blob", 0)),
         ]
-        if self.use_bloom:
-            writes.append(
-                lambda: seen_mod.build_blobs(
-                    seen_delta.select("url"), self.bloom_partitions
-                ).write.mode("overwrite").parquet(self._path("seen_blob", 0))
-            )
         with ThreadPoolExecutor(max_workers=len(writes)) as ex:
             for fut in [ex.submit(w) for w in writes]:
                 fut.result()
@@ -347,52 +285,15 @@ class CrawlEngine:
         store row count (which forces the persist)."""
         return self._pages().count()
 
-    def _fetch(self, dequeued: DataFrame) -> DataFrame:
-        """Returns dequeued + html column (null = fetch miss)."""
-        if self.fetch_mode == "join":
-            # LEFT join against the partitioned+sorted cache: Catalyst sees
-            # the cache's hash partitioning/ordering on url, so only the
-            # dequeued side shuffles+sorts — the page store side streams
-            # from cache with no exchange (asserted in tests).
-            return dequeued.join(self._pages(), "url", "left")
-        if self.fetch_mode == "probe":
-            pages = (
-                self.spark.read.parquet(self.pages_path).select("url", "html")
-            )
-            # persist hits: it feeds both the union and the miss anti-join —
-            # without this the big page-store probe runs twice per round
-            hits = (
-                pages.join(F.broadcast(dequeued), "url", "inner")
-                .select(*dequeued.columns, "html")
-                .persist()
-            )
-            self._round_handles.append(hits)
-            misses = dequeued.join(
-                F.broadcast(hits.select("url")), "url", "left_anti"
-            ).withColumn("html", F.lit(None).cast("binary"))
-            return hits.unionByName(misses)
-        from spider_spark.engine.fetch import (
-            PagesTableTransport,
-            fetch_map_in_pandas,
-        )
-
-        path = self.pages_path
-        fetched = fetch_map_in_pandas(
-            dequeued, lambda: PagesTableTransport(path), retries=3
-        ).select("url", "html")
-        return dequeued.join(fetched, "url", "left")
-
     def _process(self, dequeued: DataFrame) -> DataFrame:
         """dequeued → frontier cols + ok flag + extracted text/links.
-        Page html exists only inside this plan segment — it is neither
-        persisted nor shuffled downstream of the extract UDF."""
-        fetched = self._fetch(dequeued)
-        if self.fetch_mode != "join":
-            # the probe path preserves the page store's physical layout,
-            # where one host's pages are contiguous — rebalance before the
-            # UDF so a hot host's round doesn't straggle in one task. (The
-            # join path is already hash-partitioned on url by the join.)
-            fetched = fetched.repartition(self.n_partitions, "url")
+        Fetch is a LEFT join against the partitioned+sorted cache (null
+        html = fetch miss): Catalyst sees the cache's hash partitioning and
+        ordering on url, so only the dequeued side shuffles+sorts — the
+        page store side streams from cache with no exchange (asserted in
+        tests). Page html exists only inside this plan segment — it is
+        neither persisted nor shuffled downstream of the extract UDF."""
+        fetched = dequeued.join(self._pages(), "url", "left")
         return fetched.withColumn(
             "tl", extract_text_links_udf("html", "url")
         ).select(
@@ -451,9 +352,7 @@ class CrawlEngine:
             F.min("p").cast("int").alias("priority")
         )
         seen_all = self._read_delta_table("seen_delta", r - 1).select("url")
-        blobs_df = (
-            self._read_delta_table("seen_blob", r - 1) if self.use_bloom else None
-        )
+        blobs_df = self._read_delta_table("seen_blob", r - 1)
         new_urls = seen_mod.dedup_new_urls(
             links, seen_all, blobs_df=blobs_df,
             n_partitions=self.bloom_partitions,
@@ -504,6 +403,9 @@ class CrawlEngine:
         #     tables.
         from concurrent.futures import ThreadPoolExecutor
 
+        dead_rows = miss.filter(
+            F.col("retries") + 1 > self.policy.max_retries
+        ).select("url")
         writes = {
             "seen_delta": lambda: seen_delta.write.mode("overwrite").parquet(
                 self._path("seen_delta", r)
@@ -511,72 +413,59 @@ class CrawlEngine:
             "state": lambda: state_next.write.mode("overwrite").parquet(
                 self._path("state", r)
             ),
-        }
-        if self.use_bloom:
-            writes["seen_blob"] = lambda: seen_mod.build_blobs(
+            "seen_blob": lambda: seen_mod.build_blobs(
                 seen_delta.select("url"), self.bloom_partitions
-            ).write.mode("overwrite").parquet(self._path("seen_blob", r))
-        if not self.bench_mode:
-            dead_rows = miss.filter(
-                F.col("retries") + 1 > self.policy.max_retries
-            ).select("url")
-            writes["dead"] = lambda: dead_rows.write.mode("overwrite").parquet(
+            ).write.mode("overwrite").parquet(self._path("seen_blob", r)),
+            "dead": lambda: dead_rows.write.mode("overwrite").parquet(
                 self._path("dead", r)
-            )
+            ),
+        }
         with ThreadPoolExecutor(max_workers=len(writes)) as ex:
             futures = {k: ex.submit(fn) for k, fn in writes.items()}
             for k, fut in futures.items():
                 fut.result()
         n_pending = parquet_rowcount(self._path("state", r))
-        if self.bench_mode:
-            n_new = n_blocked = -1
-            n_dead = -1
-        else:
-            disp_counts = {
-                row["blocked"]: row["c"]
-                for row in new_flagged.groupBy("blocked").agg(
-                    F.count("*").alias("c")
-                ).collect()
-            }
-            n_new = disp_counts.get(False, 0)
-            n_blocked = disp_counts.get(True, 0)
-            n_dead = parquet_rowcount(self._path("dead", r))
+        disp_counts = {
+            row["blocked"]: row["c"]
+            for row in new_flagged.groupBy("blocked").agg(
+                F.count("*").alias("c")
+            ).collect()
+        }
+        n_new = disp_counts.get(False, 0)
+        n_blocked = disp_counts.get(True, 0)
+        n_dead = parquet_rowcount(self._path("dead", r))
         t = _mark("parallel_writes", t)
 
-        if self.bench_mode:
-            n_dequeued = n_fetched
-            n_failed = -1
-        else:
-            n_dequeued = dequeued.count()
-            n_failed = n_dequeued - n_fetched
-            metrics = self.spark.createDataFrame(
-                [
-                    (
-                        r, n_dequeued, n_fetched, n_failed, n_new, n_blocked,
-                        n_dead, n_pending,
-                    )
-                ],
-                "round int, dequeued long, fetched long, failed long, "
-                "new_urls long, blocked long, dead long, pending long",
-            )
-            metrics.write.mode("overwrite").parquet(self._path("metrics", r))
-            # per-partition lineage (north-star: "per-partition lineage +
-            # metrics"): which seen-partition produced how many pages/links
-            # this round — the audit trail a resume/debug reads
-            lineage = (
-                ok.select(
-                    F.pmod(F.hash("url"), F.lit(self.n_partitions)).alias(
-                        "partition_id"
-                    ),
-                    F.size("links").alias("n_links"),
+        n_dequeued = dequeued.count()
+        n_failed = n_dequeued - n_fetched
+        metrics = self.spark.createDataFrame(
+            [
+                (
+                    r, n_dequeued, n_fetched, n_failed, n_new, n_blocked,
+                    n_dead, n_pending,
                 )
-                .groupBy("partition_id")
-                .agg(
-                    F.count("*").alias("fetched"),
-                    F.sum("n_links").alias("links_emitted"),
-                )
+            ],
+            "round int, dequeued long, fetched long, failed long, "
+            "new_urls long, blocked long, dead long, pending long",
+        )
+        metrics.write.mode("overwrite").parquet(self._path("metrics", r))
+        # per-partition lineage (north-star: "per-partition lineage +
+        # metrics"): which seen-partition produced how many pages/links
+        # this round — the audit trail a resume/debug reads
+        lineage = (
+            ok.select(
+                F.pmod(F.hash("url"), F.lit(self.n_partitions)).alias(
+                    "partition_id"
+                ),
+                F.size("links").alias("n_links"),
             )
-            lineage.write.mode("overwrite").parquet(self._path("lineage", r))
+            .groupBy("partition_id")
+            .agg(
+                F.count("*").alias("fetched"),
+                F.sum("n_links").alias("links_emitted"),
+            )
+        )
+        lineage.write.mode("overwrite").parquet(self._path("lineage", r))
 
         timings["counts"] = round(_time.time() - t, 2)
         meta = {
@@ -592,10 +481,8 @@ class CrawlEngine:
             "timings": timings,
         }
         self._commit(r, meta)
-        for h in (dequeued, processed, new_flagged, *self._round_handles):
-            if h is not None:
-                h.unpersist()
-        self._round_handles = []
+        for h in (dequeued, processed, new_flagged):
+            h.unpersist()
         return meta
 
     # ---------- maintenance ----------
@@ -648,7 +535,7 @@ class CrawlEngine:
         last = self.last_committed_round()
         if last is None:  # round 0 (seeds committed) still compacts deltas
             return {"compacted": 0}
-        tables = ["seen_delta"] + (["seen_blob"] if self.use_bloom else [])
+        tables = ["seen_delta", "seen_blob"]
         seen = self._read_delta_table("seen_delta", last).select(
             "url", "disposition"
         )
@@ -656,11 +543,10 @@ class CrawlEngine:
         seen.coalesce(max(1, self.n_partitions // 4)).write.mode(
             "overwrite"
         ).parquet(self._staging("seen_delta"))
-        if self.use_bloom:
-            # one blob per partition_id, OR-merged executor-side per group
-            seen_mod.merge_blob_rounds(
-                self._read_delta_table("seen_blob", last)
-            ).write.mode("overwrite").parquet(self._staging("seen_blob"))
+        # one blob per partition_id, OR-merged executor-side per group
+        seen_mod.merge_blob_rounds(
+            self._read_delta_table("seen_blob", last)
+        ).write.mode("overwrite").parquet(self._staging("seen_blob"))
         plan = {"last": last, "tables": tables}
         tmp = self._compact_marker() + ".tmp"
         with open(tmp, "w") as f:
@@ -685,8 +571,7 @@ class CrawlEngine:
                 recorded = self._read_commit(0).get("bloom_partitions")
                 if recorded:
                     self.bloom_partitions = recorded
-            if self.use_bloom:
-                self._ensure_blob_coverage(last)
+            self._ensure_blob_coverage(last)
         budget = max_rounds if max_rounds is not None else self.policy.max_rounds
         r = last + 1
         executed = 0
@@ -700,9 +585,9 @@ class CrawlEngine:
         """Partition-wise probing makes blob COVERAGE correctness-critical:
         a seen URL absent from its partition's blobs would be declared
         "definitely new" and skip the exact confirm (duplicate crawl). A
-        committed round can legitimately lack a blob dir — earlier rounds
-        run with use_bloom=False, or a checkpoint from before blobs
-        existed — so on resume, backfill blobs for any such round from its
+        committed round can legitimately lack a blob dir — a checkpoint
+        written by an engine version that could skip blob writes, or one
+        from before blobs existed — so on resume, backfill blobs for any such round from its
         seen_delta (idempotent: blobs are a pure function of the delta)."""
         for r in range(0, last + 1):
             if os.path.isdir(self._path("seen_delta", r)) and not os.path.isdir(
@@ -732,17 +617,15 @@ class CrawlEngine:
         df = self._read_delta_table("results", last)
         if df is None:
             return None
+        from spider_spark.operators.scalewin import two_phase_order_index
+
         # rank ONLY the slim sort-key projection — the text column never
-        # enters the range shuffle or the persisted handle; it joins back
+        # enters the range shuffle or the pinned rank input; it joins back
         # on url (unique) afterwards
-        slim = df.select("round", "priority", "discovery_time", "url")
-        with_seq, handle, _end = assign_global_seq(
-            slim, ["round", "priority", "discovery_time", "url"], 0,
-            self.n_partitions,
+        key = ["round", "priority", "discovery_time", "url"]
+        with_seq, _n = two_phase_order_index(
+            df.select(*key), [(c, False) for c in key], "seq"
         )
-        if self._reader_handle is not None:
-            self._reader_handle.unpersist()
-        self._reader_handle = handle
         return df.join(with_seq.select("url", "seq"), "url").select(
             "url", "seq", "text", "n_links", "fetch_priority", "round"
         )

@@ -1,43 +1,27 @@
-"""Fetch layer: Arrow-batched ``mapInPandas`` with retry/backoff semantics.
+"""Fetch transports with retry/backoff semantics.
 
-Re-expresses /root/reference/asyncRequest.py:31-139 (``send_http``): bounded
-retries (``:61-66``), multiplicative backoff (``:68-75``), retryable status
-codes {500, 502, 503, 504} (``:9``). The reference runs this per-request in
-one process; here one Spark task fetches one Arrow batch of URLs, so
-parallelism comes from partitioning rather than asyncio barriers.
+Re-expresses the reference crawler's asyncRequest.py:31-139
+(``send_http``): bounded retries (``:61-66``), multiplicative backoff
+(``:68-75``), retryable status codes {500, 502, 503, 504} (``:9``).
 
 Two transports:
 
 - ``PagesTableTransport`` — resolves URLs against the Common-Crawl-style
   pages parquet (the sandbox's network stand-in per FIXTURES.md: "every
   fetch resolves against the pages table"). Opens the parquet once per
-  executor (module-global cache) and serves lookups from an in-memory dict;
+  process (module-global cache) and serves lookups from an in-memory dict;
   on a real cluster this slot is an HTTP client pool or a KV store.
 - ``FlakyTransport`` — deterministic failure injection for retry tests.
 
-The engine's default fetch path is a plain ``join`` against the pages table
-(fully relational, lets Catalyst/AQE plan it); ``fetch_mode="mapinpandas"``
-switches to this UDF path. Both must produce identical results (tested).
+The crawl engine does not call a transport: it fetches with a relational
+LEFT join of the dequeued URLs against the page store cached
+hash-partitioned and sorted on url (``CrawlEngine._process``), which
+Catalyst/AQE plan without a per-row Python hop.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-
 RETRYABLE = (500, 502, 503, 504)  # asyncRequest.py:9
-
-_FETCH_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("status", T.IntegerType()),
-        T.StructField("attempts", T.IntegerType()),
-    ]
-)
 
 _PAGES_CACHE: dict[str, dict[str, bytes]] = {}
 
@@ -102,36 +86,3 @@ def fetch_with_retry(
         if wait > 0:
             time.sleep(wait)
             wait *= backoff
-
-
-def fetch_map_in_pandas(
-    df: DataFrame,
-    transport_factory,
-    retries: int = 3,
-    interval_s: float = 0.0,
-    backoff: float = 1.0,
-) -> DataFrame:
-    """df(url, ...) → (url, html, status, attempts) via mapInPandas.
-
-    ``transport_factory`` must be a picklable zero-arg callable; the
-    transport is constructed once per task (executor-side), never shipped
-    from the driver.
-    """
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = transport_factory()
-        for pdf in batches:
-            rows = [
-                fetch_with_retry(transport, u, retries, interval_s, backoff)
-                for u in pdf["url"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"].values,
-                    "html": [h for _, h, _ in rows],
-                    "status": pd.array([s for s, _, _ in rows], dtype="int32"),
-                    "attempts": pd.array([a for _, _, a in rows], dtype="int32"),
-                }
-            )
-
-    return df.select("url").mapInPandas(_run, schema=_FETCH_SCHEMA)

@@ -38,9 +38,10 @@ the score vector stays hash-partitioned on ``host_id`` across iterations,
 and each step is a co-partitioned shuffled-hash join — the only
 per-iteration exchange is the SUM keyed on the opposite endpoint (the
 score exchange); the edge table never moves again. The same gate covers
-host-id assignment and the final ranking: both use a two-phase
-range-partition + driver prefix-sum (the ``assign_global_seq`` shape from
-``engine/crawler.py:84``) instead of a single-partition global window.
+host-id assignment and the final ranking: both use the two-phase
+range-partition + driver prefix-sum of
+:func:`spider_spark.operators.scalewin.two_phase_order_index` instead of a
+single-partition global window.
 """
 
 from __future__ import annotations
@@ -48,6 +49,7 @@ from __future__ import annotations
 import os
 
 from spider_spark.operators import load, query
+from spider_spark.operators.scalewin import two_phase_order_index
 from spider_spark.operators.sqlmurmur import hashlong_aliases
 
 _SCALE = 10**12
@@ -58,8 +60,7 @@ _ITERS = 5
 # being broadcastable (10^8-10^9 hosts × ~16 B ≈ tens of GB — over Spark's
 # 8 GB broadcast hard cap and any sane driver heap) and every g-op flips to
 # the co-partitioned Pregel layout. Env-overridable so tests exercise the
-# at-scale plan shape on fixture data; the same gate style as the crawl
-# engine's fetch-mode switch (engine/crawler.py).
+# at-scale plan shape on fixture data.
 _BCAST_HOSTS_MAX = int(
     os.environ.get("SPIDER_GRAPH_BCAST_MAX_HOSTS", "2000000")
 )
@@ -80,18 +81,6 @@ def _shuffle_parts(spark) -> int:
     return max(1, int(spark.conf.get("spark.sql.shuffle.partitions") or "32"))
 
 
-def _two_phase_order_index(df, order_col: str, out_col: str, start: int = 0,
-                           descending: bool = False):
-    """Delegates to :func:`spider_spark.operators.scalewin.
-    two_phase_order_index` (the shared two-phase global-order machinery;
-    see that module's docstring for the protocol and determinism
-    argument). Kept here under the original name because the graph suite
-    and its plan tests grew around it."""
-    from spider_spark.operators.scalewin import two_phase_order_index
-
-    return two_phase_order_index(df, [(order_col, descending)], out_col, start)
-
-
 def _dense_rank_desc(df, col: str, out_col: str):
     """Exact ``DENSE_RANK() OVER (ORDER BY col DESC)`` at scale: rank the
     DISTINCT value table via the two-phase index (ties collapse in the
@@ -101,8 +90,8 @@ def _dense_rank_desc(df, col: str, out_col: str):
     collide heavily); past the gate it falls back to a shuffle join on the
     value key, where AQE's skew-join splitting absorbs a heavily-tied
     score (e.g. trust = 0 for most unreachable hosts)."""
-    ranked, n = _two_phase_order_index(
-        df.select(col).distinct(), col, out_col, start=1, descending=True
+    ranked, n = two_phase_order_index(
+        df.select(col).distinct(), [(col, True)], out_col, start=1
     )
     return df.join(_maybe_broadcast(ranked, n), col)
 
@@ -135,8 +124,8 @@ def _derived_graph(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     d = load(spark, sf_dir, "documents")
-    hosts, n_hosts = _two_phase_order_index(
-        d.select("source").distinct(), "source", "host_id", start=0
+    hosts, n_hosts = two_phase_order_index(
+        d.select("source").distinct(), [("source", False)], "host_id"
     )
     edges0 = (
         d.join(_maybe_broadcast(hosts, n_hosts), "source")

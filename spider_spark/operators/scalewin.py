@@ -4,18 +4,23 @@ A `Window.orderBy(...)` with no `partitionBy` plans a ONE-task sort of its
 whole input ("No Partition Defined For Window Operation"). Fine for tiny
 aggregates (days, vocab pairs, top-k pools); not fine for host/domain- or
 user-cardinality tables, which reach 10^8–10^9 rows on a Common-Crawl-
-class corpus. Every helper here computes the same value with the
-range-partition + driver-prefix-sum shape of
-``engine.crawler.assign_global_seq`` (crawler.py:84): range-partition on
-the order key, collect O(partitions) per-partition counts/sums, add each
-partition's offset map-side in one Arrow batch pass.
+class corpus. Every helper here computes the same value with one
+range-partition + driver-prefix-sum shape: range-partition on the order
+key, collect O(partitions) per-partition counts/sums, add each
+partition's offset map-side in one Arrow batch pass. The crawl engine's
+``results()`` assigns its global crawl-order ``seq`` the same way.
 
 Requirements shared by all helpers: the order must be a TOTAL order over
 the input rows (callers append a unique tiebreak column — every call site
 here orders by (metric, source|user_id|value)), and the pid-stamped input
 is local-checkpointed BEFORE the driver collect, because RangePartitioner
 samples with an RDD-id-seeded reservoir — an un-pinned plan could
-re-sample different boundaries between the collect and the final pass.
+re-sample different boundaries between the collect and the final pass. A
+cache (``persist()``) is not a pin: a second identical plan shares its
+cache entry, and unpersisting either drops it for both. The pin is lazy:
+the range exchange (and its boundary sampling) runs once inside the
+``localCheckpoint`` call, which fixes the boundaries in the checkpointed
+RDD, and the driver's count collect materialises that RDD — no extra job.
 Values are unaffected by partition count or boundary placement (the
 ordering is total), so results are deterministic under any parallelism.
 """
@@ -47,7 +52,7 @@ def _pinned(df, order):
         df.repartitionByRange(n_parts, *_keys(order))
         .sortWithinPartitions(*_keys(order))
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     return d, cols
 

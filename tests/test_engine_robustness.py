@@ -122,3 +122,64 @@ def test_time_travel_reads_are_committed_prefixes(spark, tmp_path):
     with pytest.raises(ValueError):
         eng.frontier_at(1)
     assert len(eng.results(as_of_round=1).collect()) == mrows[1]["fetched"]
+
+
+def test_repeated_results_reads_keep_seq(spark, world_dir, tmp_path):
+    """Every results() call on one engine — and the first call's DataFrame
+    re-read after later calls — must carry seq = row_number() - 1 over
+    (round, priority, discovery_time, url). The checkpoint is written
+    directly (no crawl) with enough rows over several files that the range
+    partitioner samples its boundaries instead of taking every row."""
+    import json
+
+    import pandas as pd
+
+    from spider_spark.engine import CrawlEngine
+
+    ckpt = tmp_path / "ckpt_reads"
+    (ckpt / "commits").mkdir(parents=True)
+    for r in (0, 1):
+        (ckpt / "commits" / f"round_{r}.json").write_text(
+            json.dumps({"round": r, "next_seq": 0, "pending": 0})
+        )
+    n, n_files = 5000, 5
+    pdf = pd.DataFrame(
+        {
+            "url": [f"http://h{i % 17}.test/p/{(i * 7919) % n}" for i in range(n)],
+            "priority": [i % 4 for i in range(n)],
+            "discovery_time": [i % 3 for i in range(n)],
+            "text": ["t"] * n,
+            "n_links": [0] * n,
+        }
+    )
+    pdf["fetch_priority"] = pdf["priority"]
+    out = ckpt / "results" / "round=1"
+    out.mkdir(parents=True)
+    step = n // n_files
+    for k in range(n_files):
+        pdf.iloc[k * step : (k + 1) * step].to_parquet(
+            out / f"part-{k}.parquet", index=False
+        )
+    want = {
+        u: i
+        for i, u in enumerate(
+            pdf.sort_values(["priority", "discovery_time", "url"])["url"]
+        )
+    }
+
+    eng = CrawlEngine(
+        spark,
+        pages_path=os.path.join(world_dir, "pages.parquet"),
+        robots_path=os.path.join(world_dir, "robots.parquet"),
+        checkpoint_dir=str(ckpt),
+        n_partitions=4,
+    )
+
+    def seqs(df):
+        return {r["url"]: r["seq"] for r in df.select("url", "seq").collect()}
+
+    first = eng.results()
+    assert seqs(first) == want
+    for _ in range(2):
+        assert seqs(eng.results()) == want
+    assert seqs(first) == want

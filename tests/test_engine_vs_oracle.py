@@ -109,13 +109,6 @@ def test_engine_matches_oracle(spark, world_dir, tmp_path, oracle_result):
     _assert_match(eng, oracle_result, world_dir, spark)
 
 
-def test_engine_without_bloom_identical(spark, world_dir, tmp_path, oracle_result):
-    """Bloom filter is a pre-screen only — disabling it must not change
-    any output (exactness guarantee)."""
-    eng = _run_engine(spark, world_dir, str(tmp_path / "ckpt_nb"), use_bloom=False)
-    _assert_match(eng, oracle_result, world_dir, spark)
-
-
 def test_resume_after_kill(spark, world_dir, tmp_path, oracle_result):
     """Kill after round k, restart: final state identical to an
     uninterrupted run (SURVEY.md §5.4; commit-marker atomicity)."""
@@ -145,23 +138,6 @@ def test_resume_after_kill(spark, world_dir, tmp_path, oracle_result):
     )
     eng2.run()
     _assert_match(eng2, oracle_result, world_dir, spark)
-
-
-def test_mapinpandas_fetch_mode_identical(spark, world_dir, tmp_path, oracle_result):
-    """The mapInPandas transport path must equal the relational join path."""
-    eng = _run_engine(
-        spark, world_dir, str(tmp_path / "ckpt_mp"), fetch_mode="mapinpandas"
-    )
-    _assert_match(eng, oracle_result, world_dir, spark)
-
-
-def test_probe_fetch_mode_identical(spark, world_dir, tmp_path, oracle_result):
-    """The broadcast-probe fetch path (for page stores too large to keep
-    partitioned-cached) must equal the co-partitioned join path."""
-    eng = _run_engine(
-        spark, world_dir, str(tmp_path / "ckpt_pr"), fetch_mode="probe"
-    )
-    _assert_match(eng, oracle_result, world_dir, spark)
 
 
 def test_resume_with_different_partitions_identical(
@@ -244,16 +220,18 @@ def test_fetch_join_pages_side_no_exchange(spark, world_dir, tmp_path):
 def test_resume_after_no_bloom_rounds_identical(
     spark, world_dir, tmp_path, oracle_result
 ):
-    """Rounds crawled with use_bloom=False write no blob dirs; a later
-    bloom-on resume must backfill blobs for those rounds (partition-wise
-    probing treats a URL missing from its partition's blobs as
-    'definitely new' and skips the exact confirm — without backfill,
-    seen URLs would be crawled twice)."""
+    """A checkpoint whose committed rounds lack blob dirs (one written
+    before blobs existed, or by an engine that could skip them) must get
+    them backfilled on resume: partition-wise probing treats a URL missing
+    from its partition's blobs as 'definitely new' and skips the exact
+    confirm — without backfill, seen URLs would be crawled twice."""
+    import shutil
+
     from spider_spark.engine import CrawlEngine
 
     ckpt = str(tmp_path / "ckpt_bloomgap")
 
-    def mk(use_bloom):
+    def mk():
         return CrawlEngine(
             spark,
             pages_path=os.path.join(world_dir, "pages.parquet"),
@@ -261,12 +239,13 @@ def test_resume_after_no_bloom_rounds_identical(
             checkpoint_dir=ckpt,
             policy=POLICY,
             n_partitions=4,
-            use_bloom=use_bloom,
         )
 
     seeds = spark.read.parquet(os.path.join(world_dir, "seeds.parquet"))
-    mk(False).run(seeds=seeds, max_rounds=2)  # no blobs written
-    eng2 = mk(True)
+    mk().run(seeds=seeds, max_rounds=2)
+    for r in range(0, 3):  # open the gap: rounds 0-2 lose their blobs
+        shutil.rmtree(os.path.join(ckpt, "seen_blob", f"round={r}"))
+    eng2 = mk()
     eng2.run()  # must backfill rounds 0-2 blobs before round 3
     for r in range(0, 3):
         assert os.path.isdir(os.path.join(ckpt, "seen_blob", f"round={r}")), r

@@ -128,20 +128,6 @@ def test_rank_never_uses_global_window(spark, sf_dir, name):
     assert "Window" not in plan
 
 
-def test_two_phase_order_index_matches_row_number(spark):
-    """The helper must reproduce row_number()-1 over the total order for a
-    distinct-value table, including with >1 range partition."""
-    from spider_spark.operators.graph import _two_phase_order_index
-
-    vals = [((v * 7919) % 1000,) for v in range(257)]  # distinct, shuffled
-    df = spark.createDataFrame(vals, "v long")
-    out, n = _two_phase_order_index(df, "v", "idx", start=0)
-    assert n == 257
-    got = {r["v"]: r["idx"] for r in out.collect()}
-    want = {v: i for i, (v,) in enumerate(sorted(set(vals)))}
-    assert got == want
-
-
 def test_dense_rank_desc_handles_ties(spark):
     """dense_rank over a heavily-tied column: ties share a rank, ranks are
     dense from 1, descending by value."""

@@ -34,6 +34,43 @@ def test_order_index_equals_row_number(spark):
     assert {r["id"]: r["idx"] for r in got.collect()} == want
 
 
+def test_order_index_single_ascending_column(spark):
+    """One ascending single-column input: row_number()-1 over a
+    distinct-value table, including with >1 range partition."""
+    vals = [((v * 7919) % 1000,) for v in range(257)]  # distinct, shuffled
+    df = spark.createDataFrame(vals, "v long")
+    out, n = two_phase_order_index(df, [("v", False)], "idx")
+    assert n == 257
+    got = {r["v"]: r["idx"] for r in out.collect()}
+    want = {v: i for i, (v,) in enumerate(sorted(set(vals)))}
+    assert got == want
+
+
+def test_order_index_stable_across_repeated_collects(spark):
+    """Enough rows (over several input partitions) that RangePartitioner
+    samples instead of taking every row, so a re-sampled plan would move
+    the boundaries: every collect of the output — and of a second call's
+    output, and of the first again afterwards — must equal row_number()-1."""
+    n = 6000
+    df = spark.range(0, n, numPartitions=6).select(
+        F.col("id"), ((F.col("id") * 7919) % 101).alias("v")
+    )
+    order = [("v", False), ("id", False)]
+    ranked = sorted(((i * 7919) % 101, i) for i in range(n))
+    want = {i: k for k, (_, i) in enumerate(ranked)}
+
+    def got(out):
+        return {r["id"]: r["idx"] for r in out.select("id", "idx").collect()}
+
+    first, total = two_phase_order_index(df, order, "idx")
+    assert total == n
+    assert got(first) == want
+    assert got(first) == want
+    second, _ = two_phase_order_index(df, order, "idx")
+    assert got(second) == want
+    assert got(first) == want
+
+
 @pytest.mark.parametrize("n_tiles", [3, 4, 5, 300])
 def test_ntile_equals_window_ntile(spark, n_tiles):
     """Exact SQL ntile parity incl. heavy ties on the order column,

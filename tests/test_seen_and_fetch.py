@@ -83,34 +83,37 @@ def test_fetch_retry_semantics(world_dir):
     assert status == 200 and attempts == 1
 
 
-def test_probe_mode_scans_page_store_once_per_round(spark, world_dir, tmp_path):
-    """Regression pin for the round-1 double-scan: in fetch_mode="probe"
-    the page-store probe feeds BOTH the hit union branch and the miss
-    anti-join. The hits must be served from a persisted cache (both
-    branches read InMemoryTableScan), so parquet is scanned once per
-    round, and the dequeued URL set — not the store — is the broadcast
-    side of the probe join."""
-    import os
+def test_bloom_dedup_equals_exact_anti_join(spark):
+    """The bloom pre-screen never changes the dedup result: the blob path
+    must equal the plain anti-join on candidates that mix seen URLs, new
+    URLs, and URLs whose partition has no blob row at all."""
+    from pyspark.sql import functions as F
 
-    from spider_spark.engine import CrawlEngine
+    from spider_spark.engine.seen import build_blobs, dedup_new_urls
 
-    eng = CrawlEngine(
-        spark,
-        pages_path=os.path.join(world_dir, "pages.parquet"),
-        robots_path=os.path.join(world_dir, "robots.parquet"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        n_partitions=4,
-        fetch_mode="probe",
+    P = 16
+    seen = spark.createDataFrame(
+        [(f"http://s.test/{i}",) for i in range(3)], "url string"
     )
-    dequeued = spark.createDataFrame(
-        [("http://h0.test/0",), ("http://h1.test/0",)], "url string"
+    cands = spark.createDataFrame(
+        [(f"http://s.test/{i}", i) for i in range(3)]
+        + [(f"http://n{i % 5}.test/{i}", i) for i in range(40)],
+        "url string, priority int",
     )
-    fetched = eng._fetch(dequeued)
-    fetched.count()  # materialize -> populates the round's hit cache
-    plan = fetched._jdf.queryExecution().executedPlan().toString()
-    # both consumers read the cached probe result, not parquet directly
-    assert plan.count("InMemoryTableScan") >= 2, plan
-    # the probe join broadcasts the (small) dequeued side into the scan
-    assert "BroadcastHashJoin" in plan
-    for h in eng._round_handles:
-        h.unpersist()
+    # the data must exercise a candidate partition with no blob row
+    pid = F.pmod(F.hash("url"), F.lit(P)).alias("pid")
+    blob_pids = {r["pid"] for r in seen.select(pid).collect()}
+    cand_pids = {r["pid"] for r in cands.select(pid).collect()}
+    assert cand_pids - blob_pids
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("url", "priority").collect())
+
+    exact = rows(dedup_new_urls(cands, seen))
+    assert len(exact) == 40
+    got = rows(
+        dedup_new_urls(
+            cands, seen, blobs_df=build_blobs(seen, P), n_partitions=P
+        )
+    )
+    assert got == exact
